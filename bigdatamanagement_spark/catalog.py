@@ -11,6 +11,14 @@ Catalyst for free; views are registered over the RAW parquet schema
 (timestamp o_orderdate etc.) and each query does its own normalization
 (date casts), mirrored exactly in its oracle SQL, so Spark and DuckDB
 always see the same inputs.
+
+Testdata tables and fixtures (music, kv, stock, ncaa, weather) share one
+reader, ``read_parquet``, memoized per (session, path): an unmemoized
+``spark.read.parquet`` runs one Spark job per call to list files and read
+the footer schema. Files that change inside a session (the IVF/PQ stores
+``queries/index_layout`` appends to, the MERGE snapshot in
+``streaming/windows``) are read fresh: a memoized DataFrame pins the file
+listing of its first read and would miss later files.
 """
 
 from __future__ import annotations
@@ -34,11 +42,18 @@ TESTDATA_TABLES = (
 )
 
 
-# DataFrame handles are lazy plans; memoizing them per (session, path)
-# reuses the resolved relation (file listing + footer schema read happen
-# once per table per session instead of once per query). Purely a
-# planning-time saving — execution still scans fresh data each action.
+# Lazy plans: a memo hit saves planning work only; every action still
+# scans the files.
 _DF_MEMO: dict[tuple[str, str], DataFrame] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, memoized per (session, path)."""
+    key = (session_key(spark), path)
+    df = _DF_MEMO.get(key)
+    if df is None:
+        df = _DF_MEMO[key] = spark.read.parquet(path)
+    return df
 
 
 def load_testdata(
@@ -89,14 +104,9 @@ def load_testdata(
                 if register:
                     df.createOrReplaceTempView(name)
                 continue
-        key = (session_key(spark), path)
-        df = _DF_MEMO.get(key)
-        if df is None:
-            if not os.path.exists(path):
-                continue
-            df = spark.read.parquet(path)
-            _DF_MEMO[key] = df
-        dfs[name] = df
+        if not os.path.exists(path):
+            continue
+        df = dfs[name] = read_parquet(spark, path)
         if register:
             df.createOrReplaceTempView(name)
     return dfs

@@ -18,6 +18,8 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from bigdatamanagement_spark.catalog import read_parquet
+
 FIXTURES_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
 _TS = dt.datetime
@@ -462,6 +464,12 @@ def ensure_fixtures() -> None:
         fixture_path("music_listens_sameday")
     ):
         write_all()
+
+
+def read_fixture(spark, name: str):
+    """Fixture table ``name`` via the catalog's per-session parquet memo."""
+    ensure_fixtures()
+    return read_parquet(spark, fixture_path(name))
 
 
 if __name__ == "__main__":

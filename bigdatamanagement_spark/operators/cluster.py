@@ -24,10 +24,10 @@ AQE skew-join splitting handles it without manual salting.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from bigdatamanagement_spark.session import scoped_shuffle_partitions
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -72,7 +72,6 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-@contextmanager
 def _iter_partitions(spark, n_edges: int):
     """Scope spark.sql.shuffle.partitions for the contraction loop.
 
@@ -85,14 +84,8 @@ def _iter_partitions(spark, n_edges: int):
     Size the loop's shuffles from the measured edge count instead:
     ~250k edges per partition, floored at 8, capped at the session
     default so a genuinely large graph keeps full parallelism."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    scoped = min(int(old), max(8, n_edges // 250_000 + 1))
-    spark.conf.set(key, str(scoped))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return scoped_shuffle_partitions(spark, min(default, max(8, n_edges // 250_000 + 1)))
 
 
 def _driver_components(e: DataFrame) -> DataFrame:

@@ -37,7 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from bigdatamanagement_spark.catalog import load_testdata
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 
 _MICRO = 1_000_000
 
@@ -255,8 +255,7 @@ def sma_crossover_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-company windows; the fixture is reference-sized by
     construction (BASELINE.md: 36 rows), and the same plan is one
     keyed window pass at any size."""
-    ensure_fixtures()
-    sp = spark.read.parquet(fixture_path("stock_stockprice"))
+    sp = read_fixture(spark, "stock_stockprice")
     cents = F.expr("CAST(round(close * 100, 0) AS BIGINT)")
     w = Window.partitionBy("company_id").orderBy("price_date")
     w3 = w.rowsBetween(-2, 0)

@@ -37,7 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from bigdatamanagement_spark.catalog import load_testdata
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 
 _MICRO = 1_000_000
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -243,8 +243,7 @@ def gbm_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-company lag window; the fixture is reference-sized,
     and the same plan is one keyed window at any size."""
-    ensure_fixtures()
-    sp = spark.read.parquet(fixture_path("stock_stockprice"))
+    sp = read_fixture(spark, "stock_stockprice")
     cents = F.expr("CAST(round(close * 100, 0) AS BIGINT)")
     w = Window.partitionBy("company_id").orderBy("price_date")
     lr = sp.select(

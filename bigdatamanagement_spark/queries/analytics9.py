@@ -38,7 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from bigdatamanagement_spark.catalog import load_testdata
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 from bigdatamanagement_spark.operators.cluster import assign_clusters
 from bigdatamanagement_spark.queries.analytics7 import _copurchase_edges
 
@@ -51,8 +51,7 @@ def _users_view() -> str:
 
 
 def _users(spark: SparkSession) -> DataFrame:
-    ensure_fixtures()
-    return spark.read.parquet(fixture_path("kv_users"))
+    return read_fixture(spark, "kv_users")
 
 
 def geo_hotspot_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

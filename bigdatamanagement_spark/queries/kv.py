@@ -14,7 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 
 POINT_USER = "user:301"
 
@@ -25,10 +25,9 @@ _USER_FIELDS = (
 
 
 def tables(spark: SparkSession) -> dict[str, DataFrame]:
-    ensure_fixtures()
     return {
-        "users": spark.read.parquet(fixture_path("kv_users")),
-        "scores": spark.read.parquet(fixture_path("kv_scores")),
+        "users": read_fixture(spark, "kv_users"),
+        "scores": read_fixture(spark, "kv_scores"),
     }
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 from bigdatamanagement_spark.operators.recommend import (
     colisten_recommend,
     with_recommendation_ids,
@@ -21,9 +21,8 @@ from bigdatamanagement_spark.operators.recommend import (
 
 
 def tables(spark: SparkSession) -> dict[str, DataFrame]:
-    ensure_fixtures()
     t = {
-        name: spark.read.parquet(fixture_path(f"music_{name}"))
+        name: read_fixture(spark, f"music_{name}")
         for name in ("users", "songs", "listens")
     }
     return t
@@ -178,8 +177,7 @@ def same_day_recs_active(spark, sf_dir) -> DataFrame:
     three same-day cross-user rows), so the golden is NON-EMPTY and an
     inverted join inequality or wrong date truncation cannot hide
     behind 0 ≡ 0. Golden: {(1,3),(1,4),(2,5),(2,6),(3,7),(4,1)}."""
-    ensure_fixtures()
-    listens = spark.read.parquet(fixture_path("music_listens_sameday"))
+    listens = read_fixture(spark, "music_listens_sameday")
     return colisten_recommend(listens, same_day=True)
 
 

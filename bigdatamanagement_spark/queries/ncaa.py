@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 
 _TABLES = (
     "teams", "team_colors", "games", "players_games",
@@ -24,8 +24,7 @@ _TABLES = (
 
 
 def tables(spark: SparkSession) -> dict[str, DataFrame]:
-    ensure_fixtures()
-    return {n: spark.read.parquet(fixture_path(f"ncaa_{n}")) for n in _TABLES}
+    return {n: read_fixture(spark, f"ncaa_{n}") for n in _TABLES}
 
 
 _V = (

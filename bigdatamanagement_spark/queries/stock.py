@@ -11,15 +11,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 
 _DELETE_PRED = "(price_date < DATE '2022-08-20' OR company_id = 2)"
 
 
 def tables(spark: SparkSession) -> dict[str, DataFrame]:
-    ensure_fixtures()
-    company = spark.read.parquet(fixture_path("stock_company"))
-    sp = spark.read.parquet(fixture_path("stock_stockprice"))
+    company = read_fixture(spark, "stock_company")
+    sp = read_fixture(spark, "stock_stockprice")
     # S-08: DELETE as filter of the complement (engine is immutable-view based)
     sp = sp.filter(~((F.col("price_date") < F.lit("2022-08-20").cast("date")) | (F.col("company_id") == 2)))
     return {"company": company, "stockprice": sp}

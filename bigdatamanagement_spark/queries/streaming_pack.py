@@ -10,13 +10,13 @@ semantics have no DuckDB twin).
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from bigdatamanagement_spark import streaming as S
 from bigdatamanagement_spark.operators import multimodal as M
+from bigdatamanagement_spark.session import scoped_shuffle_partitions
 
 _counter = itertools.count()
 
@@ -25,26 +25,18 @@ def _uniq(name: str) -> str:
     return f"{name}_{next(_counter)}"
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Scope spark.sql.shuffle.partitions for a stateful stream drain.
+def _state_partitions(spark: SparkSession):
+    """Scope spark.sql.shuffle.partitions for a stateful stream drain to
+    min(8, defaultParallelism): one state shard per core, at most 8.
 
     Stateful streaming cost on small local inputs is dominated by a FIXED
     per-partition-per-microbatch price (state store open/commit/snapshot
     — a stream-stream join pays it twice per partition), not by data:
-    the attribution join measured 25s at 64 partitions vs ~3s warm at 8
-    on identical data. The partition count is captured in the checkpoint at
-    first start, so this is a per-query-start knob, not a session
-    setting; production streams on a real cluster want it sized like any
-    other shuffle (state shards ≈ executor cores), which is exactly why
-    it stays OUT of the session defaults."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    the attribution join measured 25s at 64 partitions vs ~3s warm at 8,
+    and at local[2] 8 shards take 4 task waves per micro-batch. The count
+    is captured in the checkpoint at first start, so this is a
+    per-query-start knob that stays OUT of the session defaults."""
+    return scoped_shuffle_partitions(spark, min(8, spark.sparkContext.defaultParallelism))
 
 
 def streaming_hourly_max(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,26 +77,16 @@ def streaming_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     so this is oracle-checkable."""
     from bigdatamanagement_spark.streaming.stateful import running_user_totals
 
-    name = _uniq("user_totals")
     with _state_partitions(spark):
-        q = (
-            running_user_totals(S.stream_events(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        out = S.run_to_memory(
+            spark,
+            running_user_totals(S.stream_events(spark, sf_dir)),
+            _uniq("user_totals"),
+            "update",
         )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(
-            "user_id",
-            F.round("total_value", 2).alias("total_value"),
-            "n_events",
-        )
-        .orderBy("user_id")
-    )
+    return out.select(
+        "user_id", F.round("total_value", 2).alias("total_value"), "n_events"
+    ).orderBy("user_id")
 
 
 def streaming_click_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,29 +248,21 @@ def streaming_idle_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact deadline; see tests/test_stateful.py)."""
     from bigdatamanagement_spark.streaming.stateful import idle_session_finalizer
 
-    name = _uniq("idle_sessions")
     with _state_partitions(spark):
-        q = (
-            idle_session_finalizer(S.stream_events(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        out = S.run_to_memory(
+            spark,
+            idle_session_finalizer(S.stream_events(spark, sf_dir)),
+            _uniq("idle_sessions"),
+            "append",
         )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            F.round("total_value", 2).alias("total_value"),
-            "closed_by",
-        )
-        .orderBy("user_id", "session_start")
-    )
+    return out.select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "n_events",
+        F.round("total_value", 2).alias("total_value"),
+        "closed_by",
+    ).orderBy("user_id", "session_start")
 
 
 def streaming_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,13 +14,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdatamanagement_spark.fixtures import ensure_fixtures, fixture_path
+from bigdatamanagement_spark.fixtures import fixture_path, read_fixture
 from bigdatamanagement_spark.operators.downsample import hourly_downsample
 
 
 def hourly(spark: SparkSession) -> DataFrame:
-    ensure_fixtures()
-    return hourly_downsample(spark.read.parquet(fixture_path("weather_raw")))
+    return hourly_downsample(read_fixture(spark, "weather_raw"))
 
 
 _V = f"""

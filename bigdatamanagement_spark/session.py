@@ -16,6 +16,7 @@ Design notes (100 TB target, tested on local[32]):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -59,6 +60,18 @@ def session_key(spark: SparkSession) -> str:
     session could be handed localCheckpointed DataFrames bound to a dead
     one. The application id is unique per SparkContext lifetime."""
     return spark.sparkContext.applicationId
+
+
+@contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """spark.sql.shuffle.partitions = ``n`` inside the ``with`` block."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def get_spark(

@@ -16,7 +16,9 @@ logic). Two API generations:
 
 The Arrow batch iterator keeps the Python crossing amortized (one call
 per key per micro-batch); state-store cost is per-partition-per-batch,
-so drains scope shuffle partitions down (see queries/streaming_pack).
+so drains size their state shards to the cores, min(8,
+defaultParallelism), instead of the session's 2x-cores shuffle default
+(see queries/streaming_pack._state_partitions).
 """
 
 from __future__ import annotations

@@ -135,19 +135,25 @@ def stream_stream_interval_join(
     return l.join(r, cond, "inner")
 
 
-def run_to_memory(spark: SparkSession, stream_df: DataFrame, name: str) -> DataFrame:
-    """Drain a (watermarked, append/complete-able) stream into an
-    in-memory table with an availableNow trigger; returns the result as a
-    batch DataFrame. Used by tests and the bench smoke path."""
+def run_to_memory(
+    spark: SparkSession, stream_df: DataFrame, name: str, output_mode: str | None = None
+) -> DataFrame:
+    """Drain a stream into an in-memory table with an availableNow
+    trigger; returns the result as a batch DataFrame. ``output_mode``
+    defaults to complete for aggregates, append otherwise. The sink's view
+    is dropped once resolved, or it would pin the rows in the driver for
+    the session's life; the returned DataFrame still reads them."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete" if _is_agg(stream_df) else "append")
+        .outputMode(output_mode or ("complete" if _is_agg(stream_df) else "append"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _is_agg(df: DataFrame) -> bool:

@@ -176,3 +176,40 @@ def test_merge_materialized_view_bootstrap(spark, sf_dir, tmp_path):
     path = str(tmp_path / "mv2")
     S.run_merge_materialized_view(spark, stream_agg, ["event_type"], path, str(tmp_path / "c2"))
     assert spark.read.parquet(path).count() == 5
+
+
+def test_state_shards_follow_cores(spark, sf_dir):
+    """A stateful drain runs min(8, defaultParallelism) state shards, read
+    from its own progress events, and leaves no memory-sink view behind."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from bigdatamanagement_spark.queries.streaming_pack import streaming_dedup_self_union
+
+    shards = []
+
+    class Shards(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            shards.extend(op.numShufflePartitions for op in event.progress.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Shards()
+    spark.streams.addListener(listener)
+    try:
+        streaming_dedup_self_union(spark, sf_dir)
+        deadline = time.time() + 30  # the listener bus delivers asynchronously
+        while not shards and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert shards and set(shards) == {min(8, spark.sparkContext.defaultParallelism)}
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("dedup_union")]
